@@ -120,7 +120,10 @@ def _rolling_hash_sql(var: str) -> str:
 
 def _tokens_sql(text_col: str) -> str:
     """SQL text of ``text.tokens``: whitespace tokens of trimmed text,
-    empty text -> empty array."""
+    empty text -> empty array. The regex literal ``'\\\\s+'`` relies on
+    the default ``spark.sql.parser.escapedStringLiterals=false`` (the
+    parser turns ``\\\\`` into one backslash); with it set to true the
+    pattern would match a literal backslash instead of whitespace."""
     return (
         f"CASE WHEN trim(`{text_col}`) = '' THEN "
         "CAST(array() AS ARRAY<STRING>) "

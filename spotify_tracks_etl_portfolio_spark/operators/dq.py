@@ -7,7 +7,9 @@ only warn, :357-361) and silver (``reference: dags/de_spotify_silver.py:82-218``
 hard gate — raises on failure, :213-216). GX compiles each expectation to
 its own SQL query; here the whole suite is **one batched aggregation
 pass** over the table — at 100 TB the difference between one scan and
-N scans is the whole game.
+N scans is the whole game. The row-level half of a suite can also ride
+the write job itself as observed metrics (``Suite.row_checks``), so a
+write-audit-publish load scans its output only for the key checks.
 
 Implemented with corrected semantics where the reference is buggy
 (SURVEY.md §5): value ranges use value comparisons, not the misapplied
@@ -16,6 +18,7 @@ string-length expectation (``reference: dags/de_spotify_to_bronze.py:315-343``).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -36,6 +39,7 @@ class ValidationReport:
 
     suite: str
     results: list[ExpectationResult] = field(default_factory=list)
+    row_count: int | None = None
 
     @property
     def success(self) -> bool:
@@ -55,6 +59,7 @@ class ValidationReport:
         return {
             "suite": self.suite,
             "success": self.success,
+            "row_count": self.row_count,
             "results": [
                 {
                     "name": r.name,
@@ -97,8 +102,19 @@ class DataQualityError(RuntimeError):
 
 @dataclass
 class Suite:
-    """Declarative expectation suite, compiled to ONE aggregation pass.
+    """Declarative expectation suite, compiled to aggregate columns.
 
+    The data checks form two lists whose values ``report`` turns into
+    one ``ValidationReport``:
+
+    - ``row_checks``: row count, ``not_null``, ``between`` and
+      ``min_value``. Plain aggregates, so ``DataFrame.observe`` can
+      attach them to a write job and they cost no scan of their own.
+    - ``key_checks``: ``unique`` and ``compound_unique``. Distinct
+      aggregates, which ``observe`` rejects; they need an aggregation
+      over the written data.
+
+    ``run`` evaluates both lists in ONE aggregation over ``df``.
     Metadata-only expectations (column types) are evaluated against the
     schema without touching data (SURVEY.md §2.4 A14).
     """
@@ -113,11 +129,50 @@ class Suite:
     row_count_min: int | None = None
     row_count_equals: int | None = None
 
-    def run(self, df: DataFrame) -> ValidationReport:
-        report = ValidationReport(self.name)
+    def row_checks(self) -> list[Column]:
+        """Row count and the per-row checks as plain aggregates."""
+        aggs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
+        for c in self.not_null:
+            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))
+        for c, (lo, hi) in self.between.items():
+            bad = ~F.col(c).between(lo, hi) & F.col(c).isNotNull()
+            aggs.append(F.sum(bad.cast("long")).alias(f"__rng_{c}"))
+        for c, lo in self.min_value.items():
+            bad = (F.col(c) < lo) & F.col(c).isNotNull()
+            aggs.append(F.sum(bad.cast("long")).alias(f"__min_{c}"))
+        return aggs
 
-        # -- metadata-only checks: no scan (A14) --
-        dtypes = dict(df.dtypes)
+    def key_checks(self) -> list[Column]:
+        """Duplicate-row counts per key as distinct aggregates (A11, A12).
+
+        ``unique`` counts non-null values minus distinct values, so
+        nulls never count as duplicates. ``compound_unique`` counts rows
+        minus distinct key structs: a struct is never null and compares
+        null members as equal, so rows whose keys agree, nulls included,
+        are duplicates, exactly as in a ``groupBy`` over the key."""
+        aggs: list[Column] = []
+        for c in self.unique:
+            aggs.append(
+                (F.count(F.col(c)) - F.count_distinct(F.col(c))).alias(f"__du_{c}")
+            )
+        for cols in self.compound_unique:
+            dup = F.count(F.lit(1)) - F.count_distinct(F.struct(*cols))
+            aggs.append(dup.alias(f"__cu_{','.join(cols)}"))
+        return aggs
+
+    def run(self, df: DataFrame) -> ValidationReport:
+        """All checks over ``df`` in one aggregation (one action)."""
+        row = df.agg(*self.row_checks(), *self.key_checks()).first()
+        return self.report(row.asDict(), dict(df.dtypes))
+
+    def report(
+        self, metrics: Mapping[str, object], dtypes: dict[str, str]
+    ) -> ValidationReport:
+        """Build the report from the values of ``row_checks`` and
+        ``key_checks`` (by alias), wherever they were computed, and the
+        table's column types."""
+        n = metrics["__row_count"]
+        report = ValidationReport(self.name, row_count=n)
         for col, expected in self.column_types.items():
             exp = (expected,) if isinstance(expected, str) else tuple(expected)
             ok = col in dtypes and dtypes[col] in exp
@@ -129,24 +184,6 @@ class Suite:
                     f"expected one of {exp}",
                 )
             )
-
-        # -- single aggregation pass for all row-level checks --
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
-        for c in self.not_null:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))
-        for c in self.unique:
-            # count == approx-free exact distinct count → uniqueness (A12)
-            aggs.append(F.countDistinct(F.col(c)).alias(f"__du_{c}"))
-            aggs.append(F.count(F.col(c)).alias(f"__cnt_{c}"))
-        for c, (lo, hi) in self.between.items():
-            bad = ~F.col(c).between(lo, hi) & F.col(c).isNotNull()
-            aggs.append(F.sum(bad.cast("long")).alias(f"__rng_{c}"))
-        for c, lo in self.min_value.items():
-            bad = (F.col(c) < lo) & F.col(c).isNotNull()
-            aggs.append(F.sum(bad.cast("long")).alias(f"__min_{c}"))
-        row = df.agg(*aggs).first()
-
-        n = row["__row_count"]
         if self.row_count_min is not None:
             report.results.append(
                 ExpectationResult(
@@ -162,17 +199,17 @@ class Suite:
                 )
             )
         for c in self.not_null:
-            bad = row[f"__nn_{c}"] or 0
+            bad = metrics[f"__nn_{c}"] or 0
             report.results.append(
                 ExpectationResult(f"not_null:{c}", bad == 0, bad, "null rows")
             )
         for c in self.unique:
-            dup = (row[f"__cnt_{c}"] or 0) - (row[f"__du_{c}"] or 0)
+            dup = metrics[f"__du_{c}"] or 0
             report.results.append(
                 ExpectationResult(f"unique:{c}", dup == 0, dup, "duplicate rows")
             )
         for c in self.between:
-            bad = row[f"__rng_{c}"] or 0
+            bad = metrics[f"__rng_{c}"] or 0
             report.results.append(
                 ExpectationResult(
                     f"between:{c}", bad == 0, bad,
@@ -180,27 +217,19 @@ class Suite:
                 )
             )
         for c in self.min_value:
-            bad = row[f"__min_{c}"] or 0
+            bad = metrics[f"__min_{c}"] or 0
             report.results.append(
                 ExpectationResult(
                     f"min_value:{c}", bad == 0, bad,
                     f"rows below {self.min_value[c]}",
                 )
             )
-
-        # -- compound uniqueness needs a grouped pass (A11) --
         for cols in self.compound_unique:
-            dups = (
-                df.groupBy(*cols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .limit(1)
-                .count()
-            )
+            key = ",".join(cols)
+            dup = metrics[f"__cu_{key}"] or 0
             report.results.append(
                 ExpectationResult(
-                    f"compound_unique:{','.join(cols)}", dups == 0, dups,
-                    "duplicate key groups",
+                    f"compound_unique:{key}", dup == 0, dup, "duplicate rows"
                 )
             )
         return report

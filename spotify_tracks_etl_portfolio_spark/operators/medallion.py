@@ -16,7 +16,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import clamp
@@ -157,6 +157,7 @@ def silver_transform(
     mode_cols: list[str],
     clamps: dict[str, tuple[float, float]],
     exact_stats: bool = True,
+    input_metrics: tuple[Observation, list[Column]] | None = None,
 ) -> DataFrame:
     """The full bronze→silver pipeline in the reference's two-phase order
     (SURVEY.md §3.2): stats over RAW bronze (duplicates included!) →
@@ -166,10 +167,17 @@ def silver_transform(
     filters ``rn = 1`` — projection before/after the dedup filter is
     semantically identical per-row, so operator order here only matters
     for the *stats input*, which must be pre-dedup.
+
+    ``input_metrics`` = ``(observation, aggregates)`` observes the
+    aggregates over the bronze rows on the job that runs the returned
+    plan (the silver write), not on the stats job.
     """
     from spotify_tracks_etl_portfolio_spark.operators.stats import compute_impute_stats
 
     stats = compute_impute_stats(bronze, median_cols, mode_cols, exact=exact_stats)
+    if input_metrics is not None:
+        obs, aggs = input_metrics
+        bronze = bronze.observe(obs, *aggs)
     imputed = impute_and_clamp(bronze, stats["medians"], stats["modes"], clamps)
     return dedup_first(imputed, dedup_key, dedup_order)
 

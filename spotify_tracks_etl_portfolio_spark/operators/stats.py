@@ -9,7 +9,8 @@ fused single query that computed medians after dedup would silently
 diverge from the reference's semantics.
 
 Scale posture: the reference pulls the full table to pandas for this;
-here it is one distributed aggregation per stats family. Exact median is
+here it is one distributed aggregation per stats family, and
+``compute_impute_stats`` runs all of them as one action. Exact median is
 the default for oracle parity; ``exact=False`` switches to
 ``percentile_approx`` for the 100 TB path (documented trade-off,
 SURVEY.md §4.2).
@@ -37,6 +38,12 @@ def _num_lit_sql(v) -> str | None:
     return None
 
 
+def _median_aggs(cols: list[str], exact: bool, accuracy: int = 10000) -> list:
+    if exact:
+        return [F.median(c) for c in cols]
+    return [F.percentile_approx(c, 0.5, accuracy) for c in cols]
+
+
 def column_medians(
     df: DataFrame, cols: list[str], exact: bool = True, accuracy: int = 10000
 ) -> dict[str, float]:
@@ -44,12 +51,48 @@ def column_medians(
     per-column in pandas, ``reference: dags/de_spotify_silver.py:56-63``)."""
     if not cols:
         return {}
-    if exact:
-        aggs = [F.median(c).alias(c) for c in cols]
-    else:
-        aggs = [F.percentile_approx(c, 0.5, accuracy).alias(c) for c in cols]
-    row = df.agg(*aggs).first()
+    aggs = _median_aggs(cols, exact, accuracy)
+    row = df.agg(*[a.alias(c) for a, c in zip(aggs, cols)]).first()
     return {c: row[c] for c in cols}
+
+
+def _mode_groups(
+    df: DataFrame, cols: list[str]
+) -> list[tuple[str, list[str], DataFrame]]:
+    """One ``(dtype, columns, plan)`` per distinct dtype among ``cols``;
+    each plan yields a ``(col, mode)`` row per column that has a
+    non-null value (see ``column_modes`` for the tie-break)."""
+    dtypes = dict(df.dtypes)
+    by_type: dict[str, list[str]] = {}
+    for c in cols:
+        by_type.setdefault(dtypes[c], []).append(c)
+
+    groups = []
+    for dtype, group in by_type.items():
+        stacked = df.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(c).alias("col"), F.col(c).alias("val")
+                        )
+                        for c in group
+                    ]
+                )
+            ).alias("cv")
+        ).select("cv.col", "cv.val")
+        counted = (
+            stacked.filter(F.col("val").isNotNull())
+            .groupBy("col", "val")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        modes = counted.groupBy("col").agg(
+            F.min_by(
+                "val", F.struct((-F.col("cnt")).alias("nc"), F.col("val"))
+            ).alias("mode")
+        )
+        groups.append((dtype, group, modes))
+    return groups
 
 
 def column_modes(df: DataFrame, cols: list[str]) -> dict[str, object]:
@@ -70,43 +113,9 @@ def column_modes(df: DataFrame, cols: list[str]) -> dict[str, object]:
     (a handful), never the column count, so a wide all-numeric schema
     still runs O(1) aggregation passes.
     """
-    if not cols:
-        return {}
-    dtypes = dict(df.dtypes)
     out: dict[str, object] = {}
-
-    by_type: dict[str, list[str]] = {}
-    for c in cols:
-        by_type.setdefault(dtypes[c], []).append(c)
-
-    for group in by_type.values():
-        stacked = df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("col"), F.col(c).alias("val")
-                        )
-                        for c in group
-                    ]
-                )
-            ).alias("cv")
-        ).select("cv.col", "cv.val")
-        counted = (
-            stacked.filter(F.col("val").isNotNull())
-            .groupBy("col", "val")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        rows = (
-            counted.groupBy("col")
-            .agg(
-                F.min_by(
-                    "val", F.struct((-F.col("cnt")).alias("nc"), F.col("val"))
-                ).alias("mode")
-            )
-            .collect()
-        )
-        found = {r["col"]: r["mode"] for r in rows}
+    for _, group, modes in _mode_groups(df, cols):
+        found = {r["col"]: r["mode"] for r in modes.collect()}
         for c in group:
             out[c] = found.get(c)
     return out
@@ -120,10 +129,46 @@ def compute_impute_stats(
 ) -> dict[str, dict[str, object]]:
     """The full stats job: ``{'medians': {...}, 'modes': {...}}`` — the
     engine's version of the XCom stats dict
-    (``reference: dags/de_spotify_silver.py:70``)."""
+    (``reference: dags/de_spotify_silver.py:70``).
+
+    ONE action: the medians row is left-joined, without a condition,
+    to the mode rows, so the scans and shuffles of both branches belong
+    to one plan and adaptive execution runs their stages together (an
+    empty mode side still returns the medians). Mode rows of different
+    dtypes share one union by giving each dtype its own ``mode_<g>``
+    column. Values are those of ``column_medians`` and ``column_modes``."""
+    groups = _mode_groups(df, mode_cols)
+    modes = None
+    for g, (_, _, plan) in enumerate(groups):
+        picked = plan.select(
+            "col",
+            *[
+                (F.col("mode") if h == g else F.lit(None).cast(dtype)).alias(
+                    f"mode_{h}"
+                )
+                for h, (dtype, _, _) in enumerate(groups)
+            ],
+        )
+        modes = picked if modes is None else modes.unionByName(picked)
+    if median_cols:
+        aggs = _median_aggs(median_cols, exact)
+        one = df.agg(*[a.alias(f"med_{i}") for i, a in enumerate(aggs)])
+        if modes is not None:
+            one = one.join(modes, how="left")
+    elif modes is not None:
+        one = modes
+    else:
+        return {"medians": {}, "modes": {}}
+    rows = one.collect()
+    slot = {c: g for g, (_, group, _) in enumerate(groups) for c in group}
+    found = {
+        r["col"]: r[f"mode_{slot[r['col']]}"]
+        for r in rows
+        if slot and r["col"] is not None
+    }
     return {
-        "medians": column_medians(df, median_cols, exact=exact),
-        "modes": column_modes(df, mode_cols),
+        "medians": {c: rows[0][f"med_{i}"] for i, c in enumerate(median_cols)},
+        "modes": {c: found.get(c) for c in mode_cols},
     }
 
 

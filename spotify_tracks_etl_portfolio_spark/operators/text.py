@@ -32,6 +32,14 @@ BPE_TOKEN_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 QUALITY_STOPWORDS = ("the", "a", "of", "and", "to")
 
 
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal: quoted, with ``\\`` and
+    ``'`` backslash-escaped. Assumes the default
+    ``spark.sql.parser.escapedStringLiterals=false``, under which the
+    parser unescapes both."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of trimmed text; empty text → empty array."""
     c = F.col(col) if isinstance(col, str) else col
@@ -781,10 +789,9 @@ def _lp_map_expr(lp: dict):
         return F.create_map()
     parts = []
     for piece, v in lp.items():
-        esc = piece.replace("\\", "\\\\").replace("'", "\\'")
+        parts.append(sql_string(piece))
         # {:f} prints Decimal fixed-point (never scientific), so the
         # literal parses as an exact DECIMAL, not a double
-        parts.append(f"'{esc}'")
         parts.append(f"CAST({v:f} AS DECIMAL(28,9))")
     return F.expr("map(" + ",".join(parts) + ")")
 
@@ -1091,7 +1098,7 @@ def add_lang_id(
     # test_add_lang_id_quality_exprs_match_column_form + the oracle.
     d = df.withColumn("__li_toks", tokens(col))
     for lang, markers in LANG_MARKERS.items():
-        in_list = ", ".join(f"'{m}'" for m in markers)
+        in_list = ", ".join(sql_string(m) for m in markers)
         d = d.withColumn(
             f"__li_{lang}",
             F.expr(f"size(filter(__li_toks, t -> t IN ({in_list})))"),
@@ -1101,7 +1108,8 @@ def add_lang_id(
     case = (
         "CASE "
         + " ".join(
-            f"WHEN __li_{la} = {best_sql} AND {best_sql} > 0 THEN '{la}'"
+            f"WHEN __li_{la} = {best_sql} AND {best_sql} > 0 "
+            f"THEN {sql_string(la)}"
             for la in langs
         )
         + " ELSE 'und' END"
@@ -1123,7 +1131,7 @@ def add_quality(
     # parsed expr, not a filter-HOF lambda (~20 ms of py4j per call —
     # same size/filter/IN ops, r14; pinned by the lang-id/quality
     # equality test)
-    stop_list = ", ".join(f"'{s}'" for s in QUALITY_STOPWORDS)
+    stop_list = ", ".join(sql_string(s) for s in QUALITY_STOPWORDS)
     d = d.withColumn(
         "__q_nstop",
         F.expr(f"size(filter(__q_toks, t -> t IN ({stop_list})))"),

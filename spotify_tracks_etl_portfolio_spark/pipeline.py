@@ -8,12 +8,32 @@ its main scalability cliff).
 
 ``run_bronze_ingest``  ≈ DAG ``csv_to_mysql_etl``
 (reference: dags/de_spotify_to_bronze.py:37-411):
-config → extract CSV → enrich metadata → pre-load validation (soft) →
-load (full|batch) → post-load DQ suite (soft) → load report.
+config → extract CSV → enrich metadata → load (full|batch) with the
+pre-load validation (soft) observed on the write job → post-load DQ
+suite over the whole table in one aggregation (soft) → load report.
 
 ``run_silver_transform`` ≈ DAG ``de_spotify_silver``
 (reference: dags/de_spotify_silver.py:24-221):
-stats over raw bronze → impute/clamp/dedup transform → DQ suite (HARD).
+stats over raw bronze (one action) → impute/clamp/dedup transform →
+write-audit-publish behind the DQ suite (HARD):
+
+- write: silver goes to ``.<name>.staging`` in the parent directory of
+  ``silver_path``; the bronze row count and the suite's row checks (row
+  count, not-null, between, min-value) are observed on that write job;
+- audit: the key checks (unique, compound unique) run as one
+  aggregation over the staged files, read with the known schema;
+- publish: on pass, Hadoop ``FileSystem`` renames swap the directories
+  (``silver_path`` → ``.<name>.previous``, staging → ``silver_path``,
+  then the previous copy is deleted). Between the two renames
+  ``silver_path`` is briefly absent; when there is no silver yet, one
+  rename publishes it. On failure the staging directory is deleted,
+  the previous silver is left untouched and ``DataQualityError`` is
+  raised. Silver stays a plain parquet directory.
+
+Data-quality metrics thus come from the write jobs themselves; only the
+distinct-count key checks scan written data. The streaming side
+(``streaming/pipeline.py``) bounds each events micro-batch by bytes
+(``STATE_SOURCE_BYTES_PER_PARTITION``), not by one file per trigger.
 """
 
 from __future__ import annotations
@@ -22,7 +42,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.operators.dq import Suite, ValidationReport
@@ -35,7 +55,8 @@ from spotify_tracks_etl_portfolio_spark.sources.readers import read_csv
 from spotify_tracks_etl_portfolio_spark.sources.writers import (
     LoadMode,
     resolve_load_mode,
-    write_table,
+    staged_directory,
+    write_with_metrics,
 )
 
 
@@ -72,21 +93,6 @@ class LoadReport:
     dq: dict[str, Any] = field(default_factory=dict)
 
 
-def preload_validation(df: DataFrame, key_cols: list[str]) -> dict[str, Any]:
-    """Pre-load pandas-style checks as one aggregation (soft gate;
-    reference: dags/de_spotify_to_bronze.py:113-159 — failures only warn,
-    the abort is commented out at :177-180)."""
-    aggs = [F.count(F.lit(1)).alias("row_count")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in key_cols
-    ]
-    row = df.agg(*aggs).first()
-    result = {"row_count": row["row_count"], "dtypes": dict(df.dtypes)}
-    for c in key_cols:
-        result[f"nulls_{c}"] = row[f"nulls_{c}"]
-    result["success"] = all(row[f"nulls_{c}"] == 0 for c in key_cols)
-    return result
-
-
 def run_bronze_ingest(
     spark: SparkSession,
     config: PipelineConfig,
@@ -95,7 +101,13 @@ def run_bronze_ingest(
     dq_suite: Suite | None = None,
     partition_by: list[str] | None = None,
 ) -> LoadReport:
-    """CSV → validated, metadata-enriched bronze parquet."""
+    """CSV → validated, metadata-enriched bronze parquet.
+
+    The pre-load checks (row count and key-column nulls; soft gate,
+    reference: dags/de_spotify_to_bronze.py:113-159 — failures only
+    warn, the abort is commented out at :177-180) are observed on the
+    bronze write itself. The post-load suite then checks the whole
+    table in one aggregation, which also gives ``rows_loaded``."""
     mode = resolve_load_mode(config.load_type, config.run_type)
     batch_id = config.resolved_batch_id()
 
@@ -105,17 +117,23 @@ def run_bronze_ingest(
         source_identifier=config.source_identifier,
         batch_identifier=batch_id,
     )
-    validation = preload_validation(enriched, key_cols)  # soft gate
-
     cleaned = nan_to_null(enriched)
-    write_table(
+    observed = write_with_metrics(
         cleaned,
         config.bronze_path,
         mode=mode,
+        count_nulls=key_cols,
         partition_by=partition_by or ["batch_identifier"],
     )
+    validation: dict[str, Any] = {
+        "row_count": observed["n_rows"],
+        "dtypes": dict(enriched.dtypes),
+    }
+    for c in key_cols:
+        validation[f"nulls_{c}"] = observed[f"nulls_{c}"]
+    validation["success"] = all(validation[f"nulls_{c}"] == 0 for c in key_cols)
 
-    loaded = spark.read.parquet(config.bronze_path)
+    loaded = spark.read.schema(cleaned.schema).parquet(config.bronze_path)
     dq_report: ValidationReport | None = None
     if dq_suite is not None:
         dq_report = dq_suite.run(loaded)  # soft gate on bronze (:357-361)
@@ -124,7 +142,7 @@ def run_bronze_ingest(
         batch_identifier=batch_id,
         load_mode=mode.value,
         rows_extracted=validation["row_count"],
-        rows_loaded=loaded.count(),
+        rows_loaded=dq_report.row_count if dq_report else loaded.count(),
         validation=validation,
         dq=dq_report.to_dict() if dq_report else {},
     )
@@ -141,20 +159,35 @@ def run_silver_transform(
     dq_suite: Suite | None = None,
 ) -> dict[str, Any]:
     """Bronze → silver with the reference's two-phase stats semantics and
-    a HARD DQ gate (reference: dags/de_spotify_silver.py:213-216)."""
+    a HARD DQ gate (reference: dags/de_spotify_silver.py:213-216), as a
+    write-audit-publish: silver is written to a staging directory with
+    the bronze row count and the suite's row checks observed on that
+    write job, the key checks run over the staged files, and only a
+    passing table replaces ``silver_path``. A failing gate raises
+    ``DataQualityError`` and leaves the previous silver as it was."""
     bronze = spark.read.parquet(config.bronze_path)
+    bronze_rows = Observation()
     silver = silver_transform(
-        bronze, dedup_key, dedup_order, median_cols, mode_cols, clamps
+        bronze, dedup_key, dedup_order, median_cols, mode_cols, clamps,
+        input_metrics=(bronze_rows, [F.count(F.lit(1)).alias("rows")]),
     )
-    write_table(silver, config.silver_path, mode=LoadMode.FULL)
-
-    loaded = spark.read.parquet(config.silver_path)
-    result: dict[str, Any] = {
-        "rows_bronze": bronze.count(),
-        "rows_silver": loaded.count(),
-    }
-    if dq_suite is not None:
-        report = dq_suite.run(loaded)
-        result["dq"] = report.to_dict()
-        report.raise_on_failure()  # hard gate
+    with staged_directory(spark, config.silver_path) as staging:
+        observed = write_with_metrics(
+            silver,
+            staging,
+            mode=LoadMode.FULL,
+            metrics=dq_suite.row_checks() if dq_suite is not None else None,
+        )
+        result: dict[str, Any] = {
+            "rows_bronze": bronze_rows.get["rows"],
+            "rows_silver": observed["n_rows"],
+        }
+        if dq_suite is not None:
+            staged = spark.read.schema(silver.schema).parquet(staging)
+            keys = dq_suite.key_checks()
+            if keys:
+                observed.update(staged.agg(*keys).first().asDict())
+            report = dq_suite.report(observed, dict(staged.dtypes))
+            result["dq"] = report.to_dict()
+            report.raise_on_failure()  # hard gate: nothing is published
     return result

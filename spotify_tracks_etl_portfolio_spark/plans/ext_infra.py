@@ -1337,14 +1337,15 @@ def streaming_type_quantiles_sync(
         in_dir = f"{d}/in"
         ev = read_parquet_table(spark, sf_dir, "events")
         # two appends → two part files → two REAL micro-batches under
-        # availableNow (the merge has actual partials to merge)
+        # availableNow with one file per trigger (the merge has actual
+        # partials to merge)
         ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
         ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-        stream = read_events_stream(spark, in_dir)
+        stream = read_events_stream(spark, in_dir, max_files_per_trigger=1)
         q = (
             streaming_histogram_cells(
                 stream,

@@ -1606,7 +1606,7 @@ def streaming_cms_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-        stream = read_events_stream(spark, in_dir)
+        stream = read_events_stream(spark, in_dir, max_files_per_trigger=1)
         q = (
             streaming_cms_cells(
                 stream, out, f"{d}/ckpt", rows=CMS_ROWS, width=CMS_W, mod=CMS_P

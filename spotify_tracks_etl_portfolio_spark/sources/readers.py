@@ -128,19 +128,36 @@ def read_parquet_table(
     return df
 
 
+def _tree_vintage(path: str) -> tuple[int, int]:
+    """``(max mtime, entry count)`` over a directory tree, or ``(mtime,
+    size)`` of a plain file. Only directories are stat'ed: adding,
+    removing or renaming an entry changes its parent directory's mtime,
+    so no file needs a stat of its own."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return st.st_mtime_ns, st.st_size
+    newest, entries = 0, 0
+    for dirpath, dirnames, filenames in os.walk(path):
+        newest = max(newest, os.stat(dirpath).st_mtime_ns)
+        entries += len(dirnames) + len(filenames)
+    return newest, entries
+
+
 def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan of a SESSION ARTIFACT (a directory written once per
     (session, sf_dir) root and then read on every serve construct),
-    with the probed schema memoized per (path, mtime, size) exactly
-    like ``read_parquet_table``: re-inferring an identical schema costs
-    a footer read per construct (~0.14 s on the 1.1k-file codes
-    artifact). A directory's mtime changes on any file add/remove/
-    overwrite (rebuilds, appends), rotating the key and re-probing.
+    with the probed schema memoized per table vintage like
+    ``read_parquet_table``: re-inferring an identical schema costs a
+    footer read per construct (~0.14 s on the 1.1k-file codes
+    artifact). A directory's vintage is the max mtime over its whole
+    directory tree plus the tree's entry count (``_tree_vintage``): a
+    file added, removed or renamed anywhere in the tree, including
+    inside a partition subdirectory, rotates the key and re-probes
+    (Spark writers never rewrite a file in place).
     No conf pinning and no schema normalization — behavior-identical
     to the bare ``spark.read.parquet`` it replaces."""
     try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        key = (os.path.abspath(path), *_tree_vintage(path))
     except OSError:
         return spark.read.parquet(path)
     raw = _RAW_SCHEMA_MEMO.get(key)

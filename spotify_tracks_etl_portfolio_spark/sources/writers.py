@@ -13,9 +13,10 @@ pruning + parquet min/max row-group skipping serve the same access paths.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from enum import Enum
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,26 +64,68 @@ def write_with_metrics(
     path: str,
     mode: LoadMode = LoadMode.BATCH,
     count_nulls: list[str] | None = None,
+    metrics: list[Column] | None = None,
+    partition_by: list[str] | None = None,
 ) -> dict:
     """Write + observe in ONE pass: the reference validates loads by
     re-counting the table after insert (reference:
     dags/de_spotify_to_bronze.py:213-214 — a second full scan); Spark's
     Observation API attaches aggregates to the write job itself, so row
     count and per-column null counts are collected as the data streams
-    to the sink — zero extra scans at any scale. Returns the observed
-    metrics dict (``n_rows`` + ``nulls_<col>``)."""
+    to the sink — zero extra scans at any scale. ``metrics`` adds any
+    further aggregate columns, named by their aliases (plain aggregates
+    only: ``observe`` rejects distinct ones). Returns the observed
+    metrics dict (``n_rows`` + ``nulls_<col>`` + ``metrics``)."""
     from pyspark.sql import Observation
 
-    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
+    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
         F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")
         for c in (count_nulls or [])
     ]
-    obs = Observation("load_metrics")
-    observed = df.observe(obs, *metrics)
-    observed.write.mode(
-        "overwrite" if mode is LoadMode.FULL else "append"
-    ).parquet(path)
+    obs = Observation()
+    write_table(
+        df.observe(obs, *aggs, *(metrics or [])), path, mode, partition_by
+    )
     return dict(obs.get)
+
+
+@contextmanager
+def staged_directory(spark, path: str):
+    """Write-audit-publish for a directory table: yields a hidden staging
+    path next to ``path`` (``.<name>.staging`` in the same parent, so
+    listings of the parent skip it). Write and audit there; when the
+    block exits normally the staging directory replaces ``path`` by
+    Hadoop ``FileSystem`` renames: ``path`` → ``.<name>.previous``,
+    staging → ``path``, then the previous copy is deleted. If ``path``
+    does not exist yet, the one rename publishes it. Between the two
+    renames ``path`` is briefly absent; readers never see a partial
+    directory. If the block raises, the staging directory is deleted and
+    ``path`` is left untouched."""
+    sc = spark.sparkContext
+    fs_path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = fs_path(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    target = fs.makeQualified(fs_path(path))
+    parent, name = target.getParent(), target.getName()
+    staging = fs_path(parent, f".{name}.staging")
+    previous = fs_path(parent, f".{name}.previous")
+    fs.delete(staging, True)  # a crashed run's leftover
+    try:
+        yield staging.toString()
+    except BaseException:
+        fs.delete(staging, True)
+        raise
+    fs.delete(previous, True)
+    had_target = fs.exists(target)
+    if had_target and not fs.rename(target, previous):
+        fs.delete(staging, True)
+        raise OSError(f"could not move {target} aside to publish {staging}")
+    if not fs.rename(staging, target):
+        if had_target:
+            fs.rename(previous, target)
+        fs.delete(staging, True)
+        raise OSError(f"could not publish {staging} as {target}")
+    if had_target:
+        fs.delete(previous, True)
 
 
 def compact_table(
@@ -116,12 +159,12 @@ def compact_table(
 def _compaction_rewrite(spark, src_path, dst_path, target_files, order) -> int:
     """Shared rewrite kernel for ``compact_table``/``optimize_table``:
     read → shuffle-free coalesce → caller's in-partition ordering →
-    overwrite ``dst_path``; returns rows written. One implementation so
-    the two maintenance entry points can't drift."""
+    overwrite ``dst_path``; returns rows written, observed on the write
+    (no re-read). One implementation so the two maintenance entry points
+    can't drift."""
     df = spark.read.parquet(src_path)
     out = order(df.coalesce(target_files))
-    out.write.mode("overwrite").parquet(dst_path)
-    return spark.read.parquet(dst_path).count()
+    return write_with_metrics(out, dst_path, LoadMode.FULL)["n_rows"]
 
 
 def optimize_table(

@@ -24,11 +24,14 @@ from pyspark.sql import functions as F
 
 
 def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over events-shaped parquet. The explicit schema
-    is mandatory for streaming reads; ``maxFilesPerTrigger`` shapes
-    micro-batches (and lets tests exercise multi-batch behavior).
+    is mandatory for streaming reads. Micro-batches are bounded by bytes
+    (``maxBytesPerTrigger`` = ``STATE_SOURCE_BYTES_PER_PARTITION``), so
+    many small files drain in one trigger instead of paying a trigger's
+    fixed cost each; an explicit ``max_files_per_trigger`` bounds them by
+    file count instead (and lets tests exercise multi-batch behavior).
 
     ``ts`` physical type is probed with a driver-side batch schema read
     (metadata only, no data scan): TIMESTAMP(NANOS) files arrive as
@@ -48,11 +51,11 @@ def read_events_stream(
         f"event_id long, ts {'long' if nanos else 'timestamp'}, "
         "user_id long, event_type string, value double, props string"
     )
-    df = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    if max_files_per_trigger is None:
+        bound = ("maxBytesPerTrigger", STATE_SOURCE_BYTES_PER_PARTITION)
+    else:
+        bound = ("maxFilesPerTrigger", max_files_per_trigger)
+    df = spark.readStream.schema(raw_schema).option(*bound).parquet(path)
     if nanos:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -202,7 +205,8 @@ def drain_events_stream_to_table(
 #: Source bytes per state-store partition for volume-derived sizing —
 #: the guide's 100 MB–1 GB shuffle-partition band, sized to the
 #: compressed source (state is a keyed reduction of its slice, so the
-#: in-memory partition lands well inside the band).
+#: in-memory partition lands well inside the band). Also the default
+#: micro-batch bound of ``read_events_stream`` (``maxBytesPerTrigger``).
 STATE_SOURCE_BYTES_PER_PARTITION = 256 * 1024 * 1024
 #: Hard cap: one state store per partition × per-batch delta files
 #: means partition count is also a file-count/maintenance knob; 32k

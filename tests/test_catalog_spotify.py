@@ -105,3 +105,81 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS orders_bkt")
         spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
+
+
+def _legacy_results(suite, df) -> dict:
+    """Expectation results as the former ``Suite.run`` computed them:
+    one aggregation for the row-level checks plus a grouped pass per
+    compound key, whose observed value was 0/1 (``limit(1).count()``)."""
+    from pyspark.sql import functions as F
+
+    dtypes = dict(df.dtypes)
+    out = {}
+    for col, expected in suite.column_types.items():
+        exp = (expected,) if isinstance(expected, str) else tuple(expected)
+        ok = col in dtypes and dtypes[col] in exp
+        out[f"column_type:{col}"] = (ok, dtypes.get(col))
+    n = df.count()
+    if suite.row_count_min is not None:
+        out["row_count_min"] = (n >= suite.row_count_min, n)
+    for c in suite.not_null:
+        bad = df.filter(F.col(c).isNull()).count()
+        out[f"not_null:{c}"] = (bad == 0, bad)
+    for c in suite.unique:
+        vals = df.filter(F.col(c).isNotNull()).select(c)
+        dup = vals.count() - vals.distinct().count()
+        out[f"unique:{c}"] = (dup == 0, dup)
+    for c, (lo, hi) in suite.between.items():
+        bad = df.filter(~F.col(c).between(lo, hi) & F.col(c).isNotNull()).count()
+        out[f"between:{c}"] = (bad == 0, bad)
+    for c, lo in suite.min_value.items():
+        bad = df.filter((F.col(c) < lo) & F.col(c).isNotNull()).count()
+        out[f"min_value:{c}"] = (bad == 0, bad)
+    for cols in suite.compound_unique:
+        dups = df.groupBy(*cols).count().filter("count > 1").limit(1).count()
+        out[f"compound_unique:{','.join(cols)}"] = (dups == 0, dups)
+    return out
+
+
+def test_spotify_suites_report_as_before(spark, tmp_path):
+    """The bronze and silver suites, now observed on the writes and
+    audited in one aggregation, report the same expectation names,
+    successes and observed values as the former implementation. The one
+    change: ``compound_unique`` observes the number of duplicate rows
+    (it was 0/1)."""
+    from pyspark.sql import functions as F
+
+    from spotify_tracks_etl_portfolio_spark.operators.dq import spotify_silver_suite
+    from spotify_tracks_etl_portfolio_spark.spotify import spotify_bronze_suite
+
+    csv = tmp_path / "dataset.csv"
+    csv.write_text(CSV_HEADER + "\n" + "\n".join(CSV_ROWS) + "\n")
+    bronze, silver = str(tmp_path / "bronze"), str(tmp_path / "silver")
+    run_spotify_bronze(spark, str(csv), bronze, load_type="full",
+                       batch_identifier="batch_20240101_000000")
+    # a second batch repeats every key: t1 twice more under the new batch id
+    second = run_spotify_bronze(spark, str(csv), bronze, load_type="batch",
+                                batch_identifier="batch_20240102_000000")
+    result = run_spotify_silver(spark, bronze, silver)
+
+    cases = [
+        (spotify_bronze_suite(), second.dq, spark.read.parquet(bronze)),
+        (spotify_silver_suite(), result["dq"], spark.read.parquet(silver)),
+    ]
+    for suite, report, table in cases:
+        got = {r["name"]: (r["success"], r["observed"]) for r in report["results"]}
+        want = _legacy_results(suite, table)
+        assert set(got) == set(want)
+        for name, (ok, observed) in want.items():
+            if name.startswith("compound_unique:"):
+                cols = name.split(":", 1)[1].split(",")
+                groups = table.groupBy(*cols).count()
+                dup_rows = groups.agg(F.sum(F.col("count") - 1)).first()[0]
+                assert got[name] == (ok, dup_rows), name
+            else:
+                assert got[name] == (ok, observed), name
+        assert report["row_count"] == table.count()
+    assert second.rows_loaded == 10
+    bronze_got = {r["name"]: r["observed"] for r in second.dq["results"]}
+    assert bronze_got["compound_unique:track_id,batch_identifier"] == 2
+    assert not second.dq["success"] and result["dq"]["success"]

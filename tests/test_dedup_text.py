@@ -1927,3 +1927,40 @@ def test_add_lang_id_quality_exprs_match_column_form(spark, sf_dir):
     assert sorted(map(tuple, got_q.collect())) == sorted(
         map(tuple, want_q.collect())
     )
+
+
+def test_lang_id_quality_sql_literals_escape_quotes(spark, monkeypatch):
+    """Markers and stopwords reach add_lang_id/add_quality's parsed SQL as
+    escaped string literals: a marker with an apostrophe or a backslash
+    must neither break the parse nor change the match, so the parsed
+    form agrees with the Column form (which never builds SQL text)."""
+    markers = dict(tx.LANG_MARKERS)
+    markers["fr"] = ("l'", "d'un", "c'est")
+    markers["zh"] = ("a\\b", "x'\\'y")
+    monkeypatch.setattr(tx, "LANG_MARKERS", markers)
+    monkeypatch.setattr(tx, "QUALITY_STOPWORDS", ("it's", "the", "a\\b"))
+    df = spark.createDataFrame(
+        [
+            (1, "c'est l' ami d'un homme"),
+            (2, "it's the a\\b way it's done"),
+            (3, "x'\\'y a\\b"),
+            (4, "the cat of the house is here"),
+            (5, ""),
+        ],
+        "id long, text string",
+    )
+    got = {
+        r["id"]: (r["predicted_lang"], r["quality_score"])
+        for r in tx.add_quality(tx.add_lang_id(df)).collect()
+    }
+    ref = {
+        r["id"]: (r["predicted_lang"], r["quality_score"])
+        for r in df.select(
+            "id",
+            tx.lang_id("text").alias("predicted_lang"),
+            tx.quality_score("text").alias("quality_score"),
+        ).collect()
+    }
+    assert got == ref
+    assert got[1][0] == "fr" and got[3][0] == "zh" and got[4][0] == "en"
+    assert tx.sql_string("x'\\'y") == "'x\\'\\\\\\'y'"

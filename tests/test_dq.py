@@ -99,3 +99,62 @@ def test_validation_report_renders_markdown(spark):
 
     ok = Suite(name="all_green", row_count_min=1).run(df)
     assert "**PASSED**" in ok.to_markdown()
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # no nulls: (1, x) twice
+        [(1, "x"), (1, "x"), (1, "y"), (2, "x")],
+        # all-null keys: three (None, None) rows are one key
+        [(None, None), (None, None), (None, None), (1, "x")],
+        # partly-null keys: (None, "x") twice, (1, None) twice
+        [(None, "x"), (None, "x"), (1, None), (1, None), (1, "x")],
+        # nulls that differ per member are different keys: no duplicates
+        [(None, "x"), (1, None), (None, None), (1, "x")],
+    ],
+)
+def test_compound_unique_null_members_match_group_by(spark, rows):
+    """count(*) - count(DISTINCT struct(key)) counts the rows beyond the
+    first of each key group exactly as a groupBy over the key does,
+    null members included (a struct compares nulls as equal)."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, "a long, b string")
+    groups = df.groupBy("a", "b").count().collect()
+    expected = sum(g["count"] - 1 for g in groups)
+    report = Suite(name="t", compound_unique=[["a", "b"]]).run(df)
+    (res,) = report.results
+    assert res.name == "compound_unique:a,b"
+    assert res.observed == expected
+    assert res.success == (expected == 0)
+    assert report.row_count == len(rows)
+    # the old grouped pass's verdict
+    dup_groups = df.groupBy("a", "b").count().filter(F.col("count") > 1).count()
+    assert res.success == (dup_groups == 0)
+
+
+def test_run_is_one_action(spark, df):
+    """The whole suite, key checks included, runs as one SQL execution
+    (the grouped pass per compound key used to be a second one)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id():
+        executions = store.executionsList()
+        return executions.last().executionId() if executions.nonEmpty() else -1
+
+    suite = Suite(
+        name="t",
+        not_null=["name"],
+        unique=["id"],
+        compound_unique=[["id", "name"]],
+        between={"score": (0.0, 1.0)},
+        row_count_min=1,
+    )
+    before = last_execution_id()
+    report = suite.run(df)
+    assert last_execution_id() - before == 1
+    assert report.row_count == 3
+    by_name = {r.name: r.observed for r in report.results}
+    assert by_name["compound_unique:id,name"] == 0
+    assert by_name["unique:id"] == 1

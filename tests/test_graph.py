@@ -260,7 +260,7 @@ def test_streaming_cms_merges_partials_across_real_microbatches(
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(f"{d}/in")
-    stream = read_events_stream(spark, f"{d}/in")
+    stream = read_events_stream(spark, f"{d}/in", max_files_per_trigger=1)
     q = (
         streaming_cms_cells(
             stream, f"{d}/cells", f"{d}/ckpt", rows=CMS_ROWS, width=CMS_W, mod=CMS_P

@@ -19,6 +19,7 @@ from spotify_tracks_etl_portfolio_spark.operators.medallion import (
 from spotify_tracks_etl_portfolio_spark.operators.stats import (
     column_medians,
     column_modes,
+    compute_impute_stats,
 )
 
 SCHEMA = "idx int, track_id string, genre string, score double"
@@ -60,6 +61,30 @@ def test_mode_typed_tie_break_not_string_order(spark):
     modes = column_modes(df, ["i", "d", "s"])
     assert modes == {"i": 9, "d": 0.25, "s": "a"}
     assert isinstance(modes["i"], int) and isinstance(modes["d"], float)
+
+
+@pytest.mark.parametrize(
+    "median_cols,mode_cols",
+    [
+        (["i", "d"], ["s", "i", "b", "n", "d"]),  # four mode dtypes
+        (["i"], ["n"]),  # no mode value at all: the medians survive
+        ([], ["s", "b"]),
+        (["d"], []),
+        ([], []),
+    ],
+)
+def test_impute_stats_one_action_match_per_family(spark, median_cols, mode_cols):
+    """compute_impute_stats runs medians and modes as one plan and
+    returns exactly what the per-family functions return."""
+    df = spark.createDataFrame(
+        [(1, "a", 2.0, True, None), (1, "b", None, True, None),
+         (3, "b", 4.0, False, None), (None, None, 5.0, None, None)],
+        "i long, s string, d double, b boolean, n string",
+    )
+    assert compute_impute_stats(df, median_cols, mode_cols) == {
+        "medians": column_medians(df, median_cols),
+        "modes": column_modes(df, mode_cols),
+    }
 
 
 def test_dedup_keeps_lowest_order_key(bronze):

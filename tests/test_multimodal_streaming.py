@@ -588,6 +588,45 @@ def test_streaming_silver_upsert_idempotent(spark, sf_dir, tmp_path):
     assert df.filter((F.col("value") < 0) | (F.col("value") > 450)).count() == 0
 
 
+def test_byte_bounded_drain_matches_one_file_per_trigger(spark, tmp_path):
+    """The medallion events drain at the default byte bound takes both
+    small files in one trigger, and publishes the same silver rows as
+    one file per trigger. The files are time-ordered and the second
+    replays ids of the first, so the cross-file dedup is exercised."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2024, 1, 1)
+    src = tmp_path / "events"
+    for f, ids in enumerate([range(0, 40), [*range(40, 75), 3, 7, 11, 41, 41]]):
+        rows = [
+            (i, t0 + timedelta(hours=f, minutes=j), i % 6, "view",
+             float(j * 37 % 500), "{}")
+            for j, i in enumerate(ids)
+        ]
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.parquet(str(src / f"f{f}"))
+
+    def drain(tag, **bound):
+        q = streaming_silver_events(
+            read_events_stream(spark, str(src / "*"), **bound),
+            str(tmp_path / tag),
+            str(tmp_path / f"ckpt_{tag}"),
+        ).start()
+        q.awaitTermination()
+        batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        rows = sorted(map(tuple, spark.read.parquet(str(tmp_path / tag)).collect()))
+        return batches, rows
+
+    n_bytes, by_bytes = drain("bytes")
+    n_files, by_files = drain("files", max_files_per_trigger=1)
+    assert (n_bytes, n_files) == (1, 2)
+    assert by_bytes == by_files
+    assert len(by_bytes) == 75
+
+
 def test_streaming_sessionize_stateful(spark, tmp_path):
     """applyInPandasWithState sessionization: within-batch gap splits
     emit closed sessions; the open session rides in state across

@@ -117,6 +117,78 @@ def test_silver_hard_gate_raises(spark, config, bronze_report):
         )
 
 
+def _tree_digest(root) -> dict[str, str]:
+    import hashlib
+    import os
+
+    out = {}
+    for dp, _, fs in os.walk(root):
+        for f in fs:
+            full = os.path.join(dp, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_failing_silver_gate_publishes_nothing(spark, tmp_path):
+    """Write-audit-publish: a silver run whose hard gate fails leaves the
+    previously published silver readable and byte-unchanged, and leaves
+    no staging directory behind. A passing run replaces it."""
+    import os
+
+    csv = tmp_path / "dataset.csv"
+    csv.write_text(CSV_HEADER + "\n" + "\n".join(CSV_ROWS) + "\n")
+    cfg = PipelineConfig(
+        csv_path=str(csv),
+        bronze_path=str(tmp_path / "bronze"),
+        silver_path=str(tmp_path / "silver"),
+        load_type="full",
+        batch_identifier="batch_20240101_000000",
+    )
+    run_bronze_ingest(
+        spark, cfg, csv_schema=SPOTIFY_CSV_SCHEMA,
+        key_cols=["track_id", "track_name", "artists"],
+    )
+
+    def silver(suite, mode_cols):
+        return run_silver_transform(
+            spark, cfg, dedup_key="track_id", dedup_order=["index"],
+            median_cols=["popularity"], mode_cols=mode_cols,
+            clamps={"popularity": (0, 100)}, dq_suite=suite,
+        )
+
+    good = silver(Suite(name="ok", unique=["track_id"]), ["artists"])
+    assert good["dq"]["success"] and good["rows_silver"] == 4
+    before = _tree_digest(cfg.silver_path)
+    rows_before = sorted(map(tuple, spark.read.parquet(cfg.silver_path).collect()))
+
+    # no mode imputation → artists keeps its null → not_null fails HARD;
+    # compound_unique forces the audit scan over the staged files too
+    bad = Suite(
+        name="strict", not_null=["artists"], compound_unique=[["track_id", "index"]]
+    )
+    with pytest.raises(DataQualityError, match="not_null:artists"):
+        silver(bad, [])
+    assert _tree_digest(cfg.silver_path) == before
+    rows_after = sorted(map(tuple, spark.read.parquet(cfg.silver_path).collect()))
+    assert rows_after == rows_before
+    assert sorted(os.listdir(tmp_path)) == ["bronze", "dataset.csv", "silver"]
+
+    # a key-check failure found only by the audit scan publishes nothing either
+    with pytest.raises(DataQualityError, match="unique:artists"):
+        silver(Suite(name="keys", unique=["artists"]), ["artists"])
+    assert _tree_digest(cfg.silver_path) == before
+    assert sorted(os.listdir(tmp_path)) == ["bronze", "dataset.csv", "silver"]
+
+    # a passing run publishes its own table in place of the old one
+    again = silver(Suite(name="ok", unique=["track_id"]), [])
+    assert again["dq"]["success"]
+    assert _tree_digest(cfg.silver_path) != before
+    nulls = spark.read.parquet(cfg.silver_path).filter("artists IS NULL").count()
+    assert nulls == 1
+    assert sorted(os.listdir(tmp_path)) == ["bronze", "dataset.csv", "silver"]
+
+
 def test_scheduled_full_load_rejected():
     with pytest.raises(ScheduledFullLoadError):
         resolve_load_mode("full", run_type="scheduled")
@@ -466,3 +538,38 @@ def test_read_parquet_table_schema_memo(spark, sf_dir, tmp_path):
     # ...and the normalized relation is identical in schema AND values
     assert second.schema == first.schema
     assert sorted(map(tuple, second.collect())) == rows_first
+
+
+def test_read_parquet_memo_rotates_on_partition_subdir_change(spark, tmp_path):
+    """The directory memo key must rotate when a file inside a partition
+    subdirectory changes (bronze's ``batch_identifier=…/`` layout): such
+    a change leaves the top directory's own mtime and size as they were,
+    so a key on those alone kept serving the old vintage's schema."""
+    import glob
+    import os
+    import shutil
+
+    from spotify_tracks_etl_portfolio_spark.sources import readers as R
+
+    table = str(tmp_path / "table")
+    spark.createDataFrame([(1, "a")], "id long, k string").write.partitionBy(
+        "k"
+    ).parquet(table)
+    assert R.read_parquet_memo(spark, table).columns == ["id", "k"]
+    top = os.stat(table)
+
+    # swap the partition's only file for one with an extra column, by
+    # renames inside the subdirectory (the top directory is not touched)
+    other = str(tmp_path / "other")
+    extra = spark.createDataFrame([(2, 7)], "id long, extra long")
+    extra.coalesce(1).write.parquet(other)
+    (old,) = glob.glob(f"{table}/k=a/part-*.parquet")
+    (new,) = glob.glob(f"{other}/part-*.parquet")
+    os.remove(old)
+    shutil.move(new, f"{table}/k=a/{os.path.basename(new)}")
+    after = os.stat(table)
+    assert (after.st_mtime_ns, after.st_size) == (top.st_mtime_ns, top.st_size)
+
+    df = R.read_parquet_memo(spark, table)
+    assert df.columns == ["id", "extra", "k"]
+    assert [tuple(r) for r in df.collect()] == [(2, 7, "a")]

@@ -2,11 +2,19 @@
 with its shuffle/scan/codegen profile — the at-scale story of each plan,
 readable without running Spark.
 
-Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
+Usage:
+  python tools/dump_plans.py
+      writes PLANS.md at the repo root
+  python tools/dump_plans.py --out <dir> <suffix> [name ...]
+      writes `.explain("formatted")` of each query to
+      <dir>/<query>_<suffix>.txt (suffix e.g. "before" / "after", so a
+      plan claim can be checked without running Spark); names default
+      to the bench HEADLINE list
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -71,7 +79,42 @@ SCALE_PATH = [
 ]
 
 
+def dump_formatted(out_dir: str, suffix: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("plans")
+    specs = all_queries()
+    for name in names or list(HEADLINE):
+        spec = specs.get(name)
+        if spec is None:
+            print(f"skip {name}: not registered")
+            continue
+        df = spec.fn(spark, SF_DIR)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Dump physical plans.")
+    ap.add_argument("--out", help="write per-query formatted plans here")
+    ap.add_argument("suffix", nargs="?", help="file-name suffix (with --out)")
+    ap.add_argument("names", nargs="*", help="queries (default: HEADLINE)")
+    args = ap.parse_args()
+    if args.out is not None:
+        if args.suffix is None:
+            ap.error("--out needs a suffix")
+        dump_formatted(args.out, args.suffix, args.names)
+        return
+    if args.suffix is not None:
+        ap.error("a suffix and names need --out")
+    write_plans_md()
+
+
+def write_plans_md() -> None:
     spark = get_spark("plans")
     specs = all_queries()
     out = [
