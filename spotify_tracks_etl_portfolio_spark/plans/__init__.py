@@ -15,7 +15,7 @@ Registry contract (driver harness, see ``__spark_entry__.py``):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Container, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,499 +47,9 @@ def register(
     return deco
 
 
-def _round_recorded(n: int) -> bool:
-    """True once a CORRECTNESS artifact of round >= ``n`` exists (or
-    the local-verification override is set) — the trigger the pending
-    registration gates and the deferred force queue share."""
-    import glob
-    import os
-    import re
-
-    if os.environ.get("SPARK_GRAFT_INCLUDE_PENDING") == "1":
-        return True
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m and int(m.group(1)) >= n:
-            return True
-    return False
-
-
-def _round10_recorded() -> bool:
-    return _round_recorded(10)
-
-
-def register_pending_r11(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r10 recording window
-    has been spent (CORRECTNESS_r10 on disk) — before that it is a
-    no-op and the function stays a plain tested operator entry point.
-
-    Why: the r10 window is budgeted EXACTLY to retire the r05-era
-    stale cohort (see ``_FORCE_RERECORD``); any debut registered now
-    would enter priority group 2 and push a stale row out. Queries
-    built late in round 10 therefore hold registration until the
-    window is spent, then debut automatically at the head of the r11
-    window (never-recorded = group 2) alongside the promoted deferred
-    force queue — 30 r06-stale + 11 deferred + these debuts still fit
-    r11's 50 slots. Local verification before the artifact lands:
-    ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces registration (used by the
-    pending-query pytest and check_oracle runs)."""
-    if _round10_recorded():
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r12 (recorded in BOTH
-#: branches): the r11 window-simulation test excludes them so the
-#: freeze-time "run the suite with the next gate forced open" check
-#: can't redden a test that pins the r11 window shape.
-PENDING_R12_NAMES: list[str] = []
-
-
-def register_pending_r12(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r11 recording window
-    has been spent (a CORRECTNESS artifact of round >= 11 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r11`,
-    one round later: the r11 window is budgeted exactly (pending-r11
-    debuts + the promoted deferred force queue + the whole r06 stale
-    cohort = 50), so queries built mid-round-11 hold registration and
-    debut automatically at the head of the r12 window. Local
-    verification: ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces
-    registration (pending-query pytest + check_oracle runs)."""
-    PENDING_R12_NAMES.append(name)
-    if _round_recorded(11):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r13 (recorded in BOTH
-#: branches): window-simulation tests exclude them so the freeze-time
-#: "run the suite with the next gate forced open" check can't redden a
-#: test that pins the r12 window shape.
-PENDING_R13_NAMES: list[str] = []
-
-
-def register_pending_r13(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r12 recording window
-    has been spent (a CORRECTNESS artifact of round >= 12 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r12`,
-    one round later: the r12 window is budgeted exactly (5 pending-r12
-    debuts + the promoted r11 deferred re-record + the whole r07 stale
-    cohort + the r08 head = 50), so queries built mid-round-12 hold
-    registration and debut automatically at the head of the r13
-    window. Local verification: ``SPARK_GRAFT_INCLUDE_PENDING=1``
-    forces registration (pending-query pytest + check_oracle runs)."""
-    PENDING_R13_NAMES.append(name)
-    if _round_recorded(12):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r14 (recorded in BOTH
-#: branches): window-simulation tests exclude them so the freeze-time
-#: "run the suite with the next gate forced open" check can't redden a
-#: test that pins the r13 window shape.
-PENDING_R14_NAMES: list[str] = []
-
-
-def register_pending_r14(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r13 recording window
-    has been spent (a CORRECTNESS artifact of round >= 13 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r13`,
-    one round later: the r13 window is budgeted exactly (2 pending-r13
-    debuts + the 4 promoted r12 force re-records + the r08 remainder +
-    the r09 head = 50; pinned by
-    ``test_r13_window_promotes_r12_deferred``), so queries built
-    mid-round-13 hold registration and debut automatically at the head
-    of the r14 window. Local verification:
-    ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces registration
-    (pending-query pytest + check_oracle runs)."""
-    PENDING_R14_NAMES.append(name)
-    if _round_recorded(13):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: The registry's canonical ordering, frozen at the round-12 split of
-#: plans/extensions.py into family modules: registration order is the
-#: final tiebreak of the driver's 50-slot recording window, so it must
-#: not depend on which module a query happens to live in or the import
-#: sequence. Names NOT in this manifest (new queries) sort after it in
-#: their own registration order — adding a query needs no manifest
-#: edit; moving one between modules changes nothing.
-_CANONICAL_ORDER: tuple[str, ...] = (
-    "row_count_lineitem",
-    "events_overview",
-    "top20_users_by_events",
-    "top_event_types_by_avg_value",
-    "event_type_share",
-    "value_histogram",
-    "hourly_event_rollup",
-    "json_props_extract",
-    "top20_users_by_events_salted",
-    "daily_active_users",
-    "sql_passthrough_event_value",
-    "events_overview_approx",
-    "event_type_value_quantiles_sketch",
-    "trailing7d_type_quantiles_sketch",
-    "daily_event_type_pivot",
-    "top50_tokens",
-    "weekly_moving_avg_events",
-    "event_value_deciles",
-    "click_purchase_funnel",
-    "variant_props_rollup",
-    "tfidf_top_terms",
-    "bm25_search_documents",
-    "scatter_value_user_sample",
-    "user_retention_cohorts",
-    "lineitem_metrics_unpivot",
-    "props_map_rollup",
-    "event_value_outliers",
-    "sliding_6h_event_counts",
-    "user_recency_weighted_activity",
-    "redact_numeric_props_events",
-    "ordered_funnel_view_click_purchase",
-    "winsorized_event_values",
-    "daily_activity_reconciliation",
-    "dedup_exact_documents",
-    "text_stats_documents",
-    "document_fingerprints",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_near_dups",
-    "simhash_documents",
-    "simhash_near_dups",
-    "simhash_near_dups_wide",
-    "embedding_ivf_index_topk",
-    "embedding_ivf_filtered_topk",
-    "embedding_cosine_topk",
-    "embedding_ivf_topk",
-    "lang_id_documents",
-    "quality_score_documents",
-    "bpe_token_counts",
-    "multimodal_decode_features",
-    "multimodal_image_fingerprints",
-    "multimodal_image_dedup_groups",
-    "gdpr_delete_documents",
-    "multimodal_audio_features",
-    "multimodal_audio_fingerprints",
-    "multimodal_video_fingerprints",
-    "multimodal_video_frame_sample",
-    "embedding_lsh_near_dups",
-    "embedding_lsh_near_dups_wide",
-    "curate_training_documents",
-    "near_dup_doc_clusters",
-    "near_dup_quality_canonicals",
-    "train_val_test_split",
-    "leakage_safe_split_documents",
-    "benchmark_decontamination",
-    "repetition_stats_documents",
-    "gopher_quality_gate_documents",
-    "curate_training_corpus_v3",
-    "ngram_repetition_documents",
-    "top_bigrams",
-    "token_length_histogram",
-    "unigram_logprob_documents",
-    "bigram_logprob_documents",
-    "ccnet_perplexity_buckets",
-    "stratified_sample_by_lang",
-    "source_mixing_weights",
-    "incremental_dedup_documents",
-    "token_budget_shards",
-    "streaming_scd2_sync",
-    "streaming_cow_upsert_sync",
-    "bpe_train_merges_documents",
-    "bpe_segment_documents",
-    "bpe_segment_documents_served",
-    "semantic_dedup_embeddings",
-    "semantic_dedup_split_cells",
-    "semantic_dedup_new_vs_corpus",
-    "semantic_dedup_new_vs_corpus_served",
-    "pack_training_sequences",
-    "prepare_training_corpus",
-    "embedding_dimension_stats",
-    "source_quality_summary",
-    "embedding_int8_quantization",
-    "near_dup_keep_best_quality",
-    "ensemble_near_dups",
-    "embedding_diverse_sample",
-    "passage_dedup_documents",
-    "exact_substring_dup_spans",
-    "exact_substring_dedup_documents",
-    "decontamination_overlap_spans",
-    "decontamination_overlap_spans_served",
-    "exact_substring_new_vs_corpus",
-    "temperature_sampled_language_mix",
-    "exact_substring_cut_new_vs_corpus",
-    "streaming_incremental_substring_sync",
-    "streaming_decontamination_sync",
-    "curate_training_corpus_v2",
-    "near_dedup_new_vs_corpus",
-    "chunk_documents_sliding",
-    "streaming_near_dedup_sync",
-    "jsonl_corpus_roundtrip",
-    "pii_scrub_documents",
-    "orc_corpus_roundtrip",
-    "cowtable_merge_roundtrip",
-    "cowtable_snapshot_diff",
-    "cowtable_zorder_pruned_scan",
-    "cowtable_bloom_point_lookup",
-    "embedding_random_projection",
-    "trade_graph_pagerank",
-    "corpus_drift_psi",
-    "hashed_token_vectors",
-    "weighted_sample_documents",
-    "dsir_resample_documents",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "embedding_ivfpq_filtered_topk",
-    "embedding_ivfpq_append_topk",
-    "ivfpq_cell_drift",
-    "cms_heavy_hitters_tokens",
-    "sessionize_events_batch",
-    "fuzzy_part_name_links",
-    "bloom_semi_join_urgent_revenue",
-    "streaming_cms_sync",
-    "streaming_type_quantiles_sync",
-    "cow_incremental_rollup",
-    "event_value_trend_by_type",
-    "daily_volume_anomalies",
-    "source_lang_entropy",
-    "hybrid_rrf_search",
-    "benford_totalprice_audit",
-    "sessionize_native_session_window",
-    "event_type_markov_transitions",
-    "token_pmi_collocations",
-    "trade_graph_degree_distribution",
-    "trigram_like_search",
-    "bm25_index_search",
-    "medallion_silver_events",
-    "dedup_window_events",
-    "impute_stats_events",
-    "null_counts_events",
-    "metadata_enrichment_events",
-    "dq_checks_events",
-    "streaming_hourly_rollup_sync",
-    "streaming_sessionize_sync",
-    "streaming_stream_stream_join_sync",
-    "q1_pricing_summary",
-    "top10_customers_by_revenue",
-    "regional_revenue",
-    "bucketed_orders_lineitem_revenue",
-    "customers_without_orders",
-    "parts_in_open_orders_semi",
-    "order_status_rollup",
-    "user_custkey_setops",
-    "user_session_windows",
-    "asof_click_purchase",
-    "orders_within_30d_pairs",
-    "order_priority_cube",
-    "lineitem_quantity_percentiles",
-    "q6_forecast_revenue",
-    "top3_customers_per_nation",
-    "cumulative_daily_revenue",
-    "small_quantity_parts_revenue",
-    "customer_order_count_distribution",
-    "significant_parts_by_revenue",
-    "daily_revenue_gapfill",
-    "customer_scd2_segment_update",
-    "top10_customers_by_revenue_salted",
-    "referential_integrity_checks",
-    "click_since_purchase_latency",
-    "q3_shipping_priority",
-    "q12_shipmode_priority",
-    "q14_promo_revenue_share",
-    "q18_large_volume_customers",
-    "nation_revenue_ranks",
-    "q7_nation_trade_volume",
-    "q10_returned_item_customers",
-    "q19_disjunctive_promo_revenue",
-    "cheapest_part_per_size",
-    "q4_late_shipment_priority",
-    "q22_rich_customers_without_orders",
-    "lineitem_column_stats",
-    "q5_local_supplier_volume",
-    "q8_nation_market_share",
-    "q15_top_supplier",
-    "q21_waiting_suppliers",
-    "lineitem_grouping_sets",
-    "q9_nation_profit",
-    "q16_supplier_part_variety",
-    "q20_excess_quantity_suppliers",
-    "q2_min_cost_supplier",
-)
-
-
-# The driver's correctness harness records only the FIRST 50 registry
-# entries each round, so registration order decides which queries get a
-# durable CORRECTNESS_r{N}.json row.  We therefore order the registry so
-# queries that have never appeared in any recorded round come first, and
-# within those, the highest-signal families (TPC-H suite, streaming
-# gates, the newest dedup ops) lead.  Recorded sets are read from the
-# CORRECTNESS_r*.json artifacts at the repo root, so the rotation is
-# self-maintaining across rounds.
-_PRIORITY_UNRECORDED = (
-    # streaming gates (real streams drained via availableNow)
-    "streaming_hourly_rollup_sync",
-    "streaming_sessionize_sync",
-    "streaming_stream_stream_join_sync",
-    "streaming_near_dedup_sync",
-    "streaming_scd2_sync",
-    # TPC-H shapes never recorded by the driver
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_late_shipment_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_trade_volume",
-    "q8_nation_market_share",
-    "q9_nation_profit",
-    "q10_returned_item_customers",
-    "q12_shipmode_priority",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q18_large_volume_customers",
-    "q19_disjunctive_promo_revenue",
-    "q20_excess_quantity_suppliers",
-    "q21_waiting_suppliers",
-    "q22_rich_customers_without_orders",
-    # newest LLM-pipeline ops
-    "passage_dedup_documents",
-    "near_dedup_new_vs_corpus",
-    "chunk_documents_sliding",
-    "jsonl_corpus_roundtrip",
-    "embedding_random_projection",
-    "pii_scrub_documents",
-    "orc_corpus_roundtrip",
-    "pack_training_sequences",
-    "semantic_dedup_embeddings",
-    "bm25_search_documents",
-    "bpe_train_merges_documents",
-    "multimodal_audio_features",
-    "multimodal_video_frame_sample",
-    "daily_activity_reconciliation",
-    "gdpr_delete_documents",
-    # the r03-verdict list of 18 never-recorded queries — their first
-    # rows are an explicit verdict item, so they outrank any query
-    # registered after the verdict
-    "asof_click_purchase",
-    "orders_within_30d_pairs",
-    "order_priority_cube",
-    "lineitem_quantity_percentiles",
-    "top3_customers_per_nation",
-    "cumulative_daily_revenue",
-    "small_quantity_parts_revenue",
-    "customer_order_count_distribution",
-    "significant_parts_by_revenue",
-    "daily_revenue_gapfill",
-    "customer_scd2_segment_update",
-    "top10_customers_by_revenue_salted",
-    "referential_integrity_checks",
-    "click_since_purchase_latency",
-    "nation_revenue_ranks",
-    "cheapest_part_per_size",
-    "lineitem_column_stats",
-    "lineitem_grouping_sets",
-)
-
-
-#: Queries whose IMPLEMENTATION materially changed this round: their old
-#: green row no longer certifies the current code, so they jump the
-#: staleness queue (right behind failures/upgrades) to get re-recorded.
-_FORCE_RERECORD = (
-    # --- round 12. The round-11 force queue (simhash_documents + the
-    # 11 round-10 deferred changed-path consumers) landed green in
-    # CORRECTNESS_r11 (verified name-by-name at round-12 start), so
-    # both queues are CLEARED per the standing per-round hygiene.
-    # This round's 50-slot window: the 5 pending-r12 debuts (group 2)
-    # + exact_substring_new_vs_corpus (_FORCE_RERECORD_AFTER_R11,
-    # group 3) + the WHOLE r07 cohort (29 rows) + the head of r08
-    # (15 of 23) = exactly 50.
-)
-
-#: Round-10 changed-path consumers deferred to the r11 window — all 11
-#: re-recorded green in CORRECTNESS_r11, queue cleared (round-12
-#: hygiene). The historical window-pin tests carry the literal list.
-_FORCE_RERECORD_AFTER_R10 = ()
-
-
-#: Round-11 changed-path consumer (the bucketed k-gram serve,
-#: `exact_substring_new_vs_corpus`) re-recorded GREEN in
-#: CORRECTNESS_r12 (verified name-by-name at round-13 start), so the
-#: queue is CLEARED per the standing per-round hygiene. The historical
-#: window-pin test carries the literal name.
-_FORCE_RERECORD_AFTER_R11 = ()
-
-
-#: Round-12 changed-path consumers DEFERRED to the r13 window (the
-#: same self-promoting mechanism): these have a pre-r12 green driver
-#: row that certifies a retired code path, but the r12 window is
-#: budgeted exactly (5 debuts + 1 promoted re-record + the whole r07
-#: cohort + the r08 head = 50), so they promote into the force queue
-#: the moment a CORRECTNESS artifact of round >= 12 exists. SWEEP_r12
-#: certifies them meanwhile.
-_FORCE_RERECORD_AFTER_R12: tuple[str, ...] = (
-    # bucketed corpus MinHash band+shingle serve (plans/extensions.py::
-    # _corpus_minhash_bands_bucketed): rows are bit-identical (oracle
-    # re-verified + plan-gated) but the serve layout both cross-corpus
-    # near-dedup consumers run changed from per-call re-banding to the
-    # persisted bucketed artifacts.
-    "near_dedup_new_vs_corpus",
-    "streaming_near_dedup_sync",
-    # Gopher rule fidelity (round-11 advice): boundary docs now KEEP at
-    # exactly 90%/30% line fractions (<= not <), the symbol rule tests
-    # '#' and ellipsis ratios per symbol, and the signal columns split
-    # (hash_word_ratio + ellipsis_word_ratio replace symbol_word_ratio)
-    # — engine and oracle changed together (parity re-verified), but
-    # the r11 row certifies the old schema/semantics.
-    "gopher_quality_gate_documents",
-)
-
-
-def _recorded_status(max_round: int | None = None) -> dict[str, tuple[int, str]]:
+def _recorded_status() -> dict[str, tuple[int, str]]:
     """``{name: (last_recorded_round, status)}`` from every past round's
-    CORRECTNESS_r*.json (repo root); status ∈ pass|fail|no_oracle.
-    ``max_round`` ignores artifacts newer than that round — used by the
-    window-simulation tests to pin "the state as of round N" so their
-    assertions stay stable after later artifacts land."""
+    CORRECTNESS_r*.json (repo root); status ∈ pass|fail|no_oracle."""
     import glob
     import json
     import os
@@ -550,8 +60,6 @@ def _recorded_status(max_round: int | None = None) -> dict[str, tuple[int, str]]
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", path)
         rnd = int(m.group(1)) if m else 0
-        if max_round is not None and rnd > max_round:
-            continue
         try:
             with open(path) as fh:
                 rows = json.load(fh)
@@ -570,27 +78,46 @@ def _recorded_status(max_round: int | None = None) -> dict[str, tuple[int, str]]
     return out
 
 
+def window_order(
+    names: Iterable[str],
+    recorded: Mapping[str, tuple[int, str]],
+    has_oracle: Container[str],
+) -> list[str]:
+    """Order ``names`` for the driver's recording window, which records
+    only the first 50 registry entries each round.
+
+    The sort key is (group, last recorded round, name). Groups, most
+    urgent first:
+
+    0. last row FAILED — the fix needs a green row;
+    1. last row was rows-only (``no_oracle``) but the query is now in
+       ``has_oracle`` — the upgrade needs a hash row;
+    2. never recorded — needs a first row;
+    3. everything else, stalest row first — so every query cycles back
+       through the window and a late regression cannot hide.
+
+    ``recorded`` is ``_recorded_status()``-shaped. A changed query needs
+    no queue: it re-records when its turn comes round, and the replica
+    sweep (``tools/check_oracle.py``) certifies it meanwhile.
+    """
+
+    def key(name: str) -> tuple[int, int, str]:
+        rec = recorded.get(name)
+        if rec is None:
+            return (2, 0, name)
+        rnd, status = rec
+        if status == "fail":
+            return (0, rnd, name)
+        if status == "no_oracle" and name in has_oracle:
+            return (1, rnd, name)
+        return (3, rnd, name)
+
+    return sorted(names, key=key)
+
+
 def all_queries() -> dict[str, QuerySpec]:
     """Import every plan module (side-effect: registration) and return
-    the full registry, ordered for the driver's 50-slot recording
-    window. Priority (most-urgent first):
-
-    0. last record FAILED — the fix needs a green row before anything
-       else (a known-bad row outranks a missing row);
-    1. last record was rows-only (``no_oracle``) but the query NOW has
-       an oracle — the upgrade needs a hash row (a verdict item when
-       it happens);
-    2. never recorded — must get a first row;
-    3. implementation changed this round (``_FORCE_RERECORD``) — the
-       old green row certifies dead code;
-    4. everything else, STALEST recorded round first — so previously
-       recorded queries keep cycling back through the window and a
-       late regression can't hide forever (round-3 advice).
-
-    With no artifacts on disk (fresh checkout) every query is group 2
-    and the order is the deterministic priority list + registration
-    order — no environment dependence beyond the artifacts themselves.
-    """
+    the full registry in :func:`window_order`."""
     from spotify_tracks_etl_portfolio_spark.plans import (  # noqa: F401
         analytics,
         extensions,
@@ -598,46 +125,6 @@ def all_queries() -> dict[str, QuerySpec]:
         relational,
     )
 
-    recorded = _recorded_status()
-    prio = {name: i for i, name in enumerate(_PRIORITY_UNRECORDED)}
-    force_seq = _FORCE_RERECORD
-    if any(rnd >= 10 for rnd, _status in recorded.values()):
-        # the r10 window has been spent on the stale cohort — promote
-        # the deferred changed-path consumers into the force queue
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R10
-    if any(rnd >= 11 for rnd, _status in recorded.values()):
-        # likewise once the r11 window is spent: the r11 changed-path
-        # consumer re-records at the head of the r12 force group
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R11
-    if any(rnd >= 12 for rnd, _status in recorded.values()):
-        # and once the r12 window is spent: round-12 changed-path
-        # consumers re-record at the head of the r13 force group
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R12
-    force = {name: i for i, name in enumerate(force_seq)}
-
-    def sort_key(item: tuple[int, str]) -> tuple[int, int, int, int]:
-        idx, name = item
-        rec = recorded.get(name)
-        if rec is None:
-            return (2, prio.get(name, len(prio)), 0, idx)
-        rnd, status = rec
-        if status == "fail":
-            return (0, 0, rnd, idx)
-        if status == "no_oracle" and QUERIES[name].oracle is not None:
-            return (1, 0, rnd, idx)
-        if name in force:
-            return (3, force[name], 0, idx)
-        return (4, 0, rnd, idx)
-
-    # Canonicalize registration order before the priority sort: the
-    # manifest pins the pre-split order; names beyond it (new queries)
-    # keep their own registration order after it. This makes the
-    # window's idx tiebreak independent of module layout.
-    canon = {n: i for i, n in enumerate(_CANONICAL_ORDER)}
-    ins = {n: i for i, n in enumerate(QUERIES)}
-    base = sorted(
-        QUERIES,
-        key=lambda n: (0, canon[n]) if n in canon else (1, ins[n]),
-    )
-    ordered = sorted(enumerate(base), key=sort_key)
-    return {name: QUERIES[name] for _, name in ordered}
+    has_oracle = {n for n, spec in QUERIES.items() if spec.oracle is not None}
+    order = window_order(QUERIES, _recorded_status(), has_oracle)
+    return {name: QUERIES[name] for name in order}

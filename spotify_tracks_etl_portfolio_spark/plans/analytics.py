@@ -561,9 +561,6 @@ def events_overview_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from spotify_tracks_etl_portfolio_spark.plans import register_pending_r11
-
-
 def _type_quantiles_from_cells(vc: DataFrame) -> DataFrame:
     """Rank-select per-group approx median/p99 from mergeable histogram
     cells ``(event_type, b, c)`` — shared by the batch sketch query and
@@ -643,7 +640,7 @@ FROM med JOIN p99 USING (event_type) JOIN vt USING (event_type)
 """
 
 
-@register_pending_r11(
+@register(
     "event_type_value_quantiles_sketch",
     oracle=TYPE_QUANTILES_ORACLE,
     description="PER-GROUP approximate quantiles from the mergeable "
@@ -656,8 +653,7 @@ FROM med JOIN p99 USING (event_type) JOIN vt USING (event_type)
     "runs over sketch-sized (#groups × #bins) rows. Same deterministic "
     "integer math as the global sketch (micro-int quantization, "
     "power-of-two bins, integer ranks, midpoint estimates ≤ half a bin "
-    "off), hash-checked. Registered via the pending-r11 gate (the r10 "
-    "window is budgeted to the stale cohort); pytest-verified now",
+    "off), hash-checked.",
     tags=("analytics", "approx", "sketch"),
 )
 def event_type_value_quantiles_sketch(

@@ -29,13 +29,14 @@ module holds those variants ready:
   where the double-typed originals demonstrably mismatch).
 
 TO APPLY (only on a classified driver-gate hit — this changes recorded
-output types, so it must go through a force-rerecord round):
+output types):
 
 1. call ``apply()`` at the end of ``plans/__init__.all_queries``'s
    import block (one line: ``from ... import decimal_contingency;
    decimal_contingency.apply()``);
-2. add the four names to ``_FORCE_RERECORD`` so the next round's window
-   re-records them under the new schema;
+2. nothing to queue: the four queries re-record under the new schema
+   when the stalest-first window order reaches them, and the replica
+   sweep (``tools/check_oracle.py``) certifies them meanwhile;
 3. delete this docstring's dormancy notes.
 """
 

@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_table
 
@@ -252,7 +247,7 @@ def leakage_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r12(
+@register(
     "curate_training_corpus_v3",
     oracle=f"""
 WITH canon AS (
@@ -310,8 +305,7 @@ FROM h JOIN r USING (lang) WHERE h < thr
     "broadcast); the gated corpus materializes once (slim "
     "localCheckpoint, the v2/grouped_prefix_sum pattern — it IS the "
     "persisted artifact of a real pipeline). Deterministic end-to-end "
-    "(no RNG anywhere: the mix replays from the recipe alone). "
-    "Registered via the pending-r12 gate; pytest-verified now",
+    "(no RNG anywhere: the mix replays from the recipe alone).",
     tags=("extension", "curation", "dedup", "quality", "sampling"),
 )
 def curate_training_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,7 +814,7 @@ def source_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r11(
+@register(
     "temperature_sampled_language_mix",
     oracle=f"""
 WITH c AS (
@@ -858,7 +852,7 @@ SELECT doc_id, lang FROM h JOIN r USING (lang) WHERE h < thr
     "join at any scale; at extreme N the BIGINT products upgrade to "
     "DECIMAL(38,0). Measured at the gate: en (218 docs) keeps ~35%, "
     "fr (64) keeps ~65% — the upweighting inversion the recipe "
-    "exists for. Registered via the pending-r11 gate",
+    "exists for.",
     tags=("extension", "curation", "sampling"),
 )
 def temperature_sampled_language_mix(
@@ -1256,7 +1250,7 @@ LIMIT {k}
 
 
 
-@register_pending_r13(
+@register(
     "dsir_resample_documents",
     oracle=_dsir_oracle(),
     description="DSIR-style importance resampling (Xie et al. 2023 — "

@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import (
     read_parquet_memo,
@@ -1451,8 +1446,8 @@ FROM spans
 #: Bucket count for the persisted corpus k-gram table. 32 = the test
 #: session's shuffle partitions, so the bucket layout never CAPS the
 #: serve join's parallelism below what a shuffle would get (probed:
-#: 8 buckets cost ~11% at 10x for exactly that reason —
-#: .stress/bucketed_kgram_probe_r11.json); at 100 TB size the count so
+#: 8 buckets cost ~11% at 10x for exactly that reason — BENCH_NOTES.md,
+#: round 11 bucketed k-gram serve probe); at 100 TB size the count so
 #: each bucket file is ~an executor-memory partition.
 _XS_KGRAM_BUCKETS = 32
 
@@ -1501,8 +1496,8 @@ def _corpus_kgram_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Bucket count for the persisted corpus MinHash band + shingle tables —
 #: sized like _XS_KGRAM_BUCKETS (match shuffle parallelism; 8 buckets
-#: measurably capped the bucketed k-gram join's parallelism, probed in
-#: .stress/bucketed_kgram_probe_r11.json). At 100 TB size so each
+#: measurably capped the bucketed k-gram join's parallelism, BENCH_NOTES.md
+#: round 11 bucketed k-gram serve probe). At 100 TB size so each
 #: bucket file is ~an executor-memory partition.
 _MH_BAND_BUCKETS = 32
 
@@ -1618,7 +1613,7 @@ def exact_substring_new_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 
-@register_pending_r11(
+@register(
     "exact_substring_cut_new_vs_corpus",
     oracle=f"""
 WITH {_XGRAM_CTES},
@@ -1652,9 +1647,7 @@ FROM keep GROUP BY doc_id
     "the span sweep from the SAME persisted corpus k-gram artifact as "
     "exact_substring_new_vs_corpus (one nightly build, both "
     "consumers); the cut is the shared JVM-side higher-order position "
-    "filter — batch-cost per ingest, corpus never re-exploded. "
-    "Registered via the pending-r11 gate (the r10 window is budgeted "
-    "to the stale cohort); pytest-verified now",
+    "filter — batch-cost per ingest, corpus never re-exploded.",
     tags=("extension", "dedup", "curation"),
 )
 def exact_substring_cut_new_vs_corpus(
@@ -1672,7 +1665,7 @@ def exact_substring_cut_new_vs_corpus(
 
 
 
-@register_pending_r11(
+@register(
     "streaming_incremental_substring_sync",
     oracle=_XS_NEW_VS_CORPUS_ORACLE,
     description="9th streaming gate: the incoming-crawl stream (new "
@@ -1688,9 +1681,7 @@ def exact_substring_cut_new_vs_corpus(
     "hint (size-planned; bucketed artifact at scale ⇒ only the "
     "micro-batch side shuffles per trigger). Batch boundaries provably "
     "can't change the result: a doc's spans depend only on its own "
-    "text and the static corpus set. Registered via the pending-r11 "
-    "gate (the r10 window is budgeted to the stale cohort); "
-    "pytest-verified now",
+    "text and the static corpus set.",
     tags=("streaming", "extension", "dedup", "curation"),
 )
 @pinned_stream_session

@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import (
     read_parquet_memo,
@@ -920,7 +915,7 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r11(
+@register(
     "embedding_ivfpq_filtered_topk",
     oracle=_ivfpq_topk_oracle(
         n_queries=TOPK_N_QUERIES,
@@ -938,8 +933,7 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hole). Same derived geometry and determinism contract as the "
     "unfiltered twin; at 100 TB the codes table carries the metadata "
     "columns, so filtered vector search scans m-byte codes + the "
-    "filter column only. Registered via the pending-r11 gate (the r10 "
-    "window is budgeted to the stale cohort); pytest-verified now",
+    "filter column only.",
     tags=("extension", "similarity", "approx"),
 )
 def embedding_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,7 +977,7 @@ _IVFPQ_APPEND_BATCH = "vec_id % 10 = 7"
 
 
 
-@register_pending_r12(
+@register(
     "embedding_ivfpq_append_topk",
     oracle=_ivfpq_topk_oracle(
         n_queries=TOPK_N_QUERIES,
@@ -1004,9 +998,7 @@ _IVFPQ_APPEND_BATCH = "vec_id % 10 = 7"
     "rows only (train_filter), assignment/encoding cover the union — "
     "bit-identical to the engine's append path. Per-batch cost at "
     "100 TB: batch explode + batch-sized shuffle into cells; the base "
-    "corpus is never touched. Registered via the pending-r12 gate "
-    "(the r11 window is budgeted: 8 debuts + 12 force re-records + "
-    "the full 30-row r06 cohort = 50); pytest-verified now",
+    "corpus is never touched.",
     tags=("extension", "similarity", "approx"),
 )
 def embedding_ivfpq_append_topk(
@@ -1100,7 +1092,7 @@ FROM cc, t
 
 
 
-@register_pending_r12(
+@register(
     "ivfpq_cell_drift",
     oracle=_ivfpq_cell_drift_oracle(),
     description="Index-health monitor for the INCREMENTAL IVFPQ index "
@@ -1114,8 +1106,7 @@ FROM cc, t
     "math, no embedding IO at serve) + one sketch-sized agg and a "
     "1-row totals broadcast. Oracle replays the frozen-base coarse "
     "quantizer (train on base, assign the union) and the exact share "
-    "arithmetic. Registered via the pending-r12 gate; pytest-verified "
-    "now",
+    "arithmetic.",
     tags=("extension", "similarity", "monitoring"),
 )
 def ivfpq_cell_drift(spark: SparkSession, sf_dir: str) -> DataFrame:

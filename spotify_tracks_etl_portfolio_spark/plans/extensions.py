@@ -1,8 +1,9 @@
 """Extension query families — facade.
 
 The implementation lives in the family modules (split at round 12 from
-the original single file; registry ordering is pinned by
-``plans._CANONICAL_ORDER`` so the split cannot move a window slot):
+the original single file; the registry order is ``plans.window_order``,
+which sorts by recorded state and name, so moving a query between
+modules cannot move a window slot):
 
 - :mod:`._ext_shared`  — shared scratch/artifact plumbing + SQL fragments
 - :mod:`.ext_text`       — text analysis / LM / BPE / search

@@ -812,23 +812,18 @@ def test_dsir_scoring_is_projection_plus_topk(spark, sf_dir):
     pure projection — the returned plan must contain no join, no
     aggregate exchange, and take its top-k via TakeOrderedAndProject,
     never a global range sort."""
-    import os
+    from pyspark.sql import functions as F
 
-    os.environ["SPARK_GRAFT_INCLUDE_PENDING"] = "1"
-    try:
-        from spotify_tracks_etl_portfolio_spark.plans.ext_curation import (
-            dsir_importance_scores,
-        )
-        from spotify_tracks_etl_portfolio_spark.sources.readers import (
-            read_parquet_table,
-        )
-        from pyspark.sql import functions as F
+    from spotify_tracks_etl_portfolio_spark.plans.ext_curation import (
+        dsir_importance_scores,
+    )
+    from spotify_tracks_etl_portfolio_spark.sources.readers import (
+        read_parquet_table,
+    )
 
-        docs = read_parquet_table(spark, sf_dir, "documents")
-        df = dsir_importance_scores(docs, F.col("lang") == "en")
-        plan = plan_of_df(df)
-    finally:
-        os.environ.pop("SPARK_GRAFT_INCLUDE_PENDING", None)
+    docs = read_parquet_table(spark, sf_dir, "documents")
+    df = dsir_importance_scores(docs, F.col("lang") == "en")
+    plan = plan_of_df(df)
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
     assert "Join" not in plan
